@@ -15,29 +15,41 @@ each maps to one method here:
 
 Scale design (the part the reference outsources to Qdrant/Cohere):
 
-- the "vector store" is a partitioned parquet layout under
-  ``index_dir`` (chunks + embeddings + idf weights) — a storage format
-  a 1000-executor cluster can scan/prune, not a serving index;
+- the "vector store" is a parquet layout under ``index_dir`` (chunks +
+  embeddings + idf weights) — a storage format a 1000-executor cluster
+  can scan/prune, not a serving index. Files are capped at
+  ceil(n_chunks / defaultParallelism) rows, so even a corpus that
+  arrives as one input partition scans on every core (no shuffle: the
+  cap only rolls files inside each write task);
 - embedding is HashingTF(dim)+IDF: hashing is stateless murmur3 (any
   executor embeds any row with no model shuffle), and the IDF fit is
-  the single global aggregate of the write path (SURVEY §3.1);
-- retrieval is batch top-k: cosine as a codegen'd higher-order-function
-  expression, fetch_k via TakeOrderedAndProject, MMR only ever touches
-  <= fetch_k rows (the reference's own bound, app.py:264-266);
+  the single global aggregate of the write path (SURVEY §3.1); its row
+  count is the chunk count, so ingest never re-runs itself to count;
+- retrieval is batch top-k: the corpus norm is projected once per
+  chunk below the cross join and the query norm once per query on the
+  broadcast side, so each (chunk, query) pair costs one HOF dot —
+  ``dot / (en * qn)`` is ``cosine``'s own fold order and division, so
+  sims are bit-identical. fetch_k survives a per-query row_number
+  window (a partial WindowGroupLimit runs before its shuffle), and MMR
+  only ever touches <= fetch_k rows (the reference's own bound,
+  app.py:264-266);
 - queries are a DataFrame, not a string: ``retrieve`` takes a whole
   table of queries and resolves them in ONE pass over the corpus
   (query-side broadcast), because at 100 TB per-query scans are the
-  bug, not the feature.
+  bug, not the feature. ``query`` consumes that pass once: the
+  relevance gate and the source previews come from one per-query
+  aggregate, so the index is scanned and scored once per call.
 """
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine
+from ..functions.vector import dot, norm
 from ..operators.ml import mmr_select
 from ..operators.text import chunk_documents
 
@@ -45,6 +57,14 @@ from ..operators.text import chunk_documents
 DEFAULT_K = 5
 DEFAULT_FETCH_K = 20
 DEFAULT_LAMBDA = 0.5
+
+# the index's on-disk schemas, given to the reader so that planning a
+# read starts no footer-inference job
+CHUNKS_SCHEMA = (
+    "chunk_id long, doc_id long, chunk_no int, page_content string, "
+    "embedding array<double>"
+)
+IDF_SCHEMA = "idf array<double>"
 
 
 @dataclass(frozen=True)
@@ -70,16 +90,27 @@ class RagPipeline:
         self, docs: DataFrame, text_col: str = "text", mode: str = "overwrite"
     ) -> IngestStats:
         """SURVEY §3.1: documents -> 1000/200 chunks -> TF-IDF embed ->
-        partitioned parquet index. ``mode="overwrite"`` reproduces the
-        reference's new-file cache invalidation (app.py:455-461): a
-        re-ingest atomically replaces the collection.
+        parquet index. ``mode="overwrite"`` reproduces the reference's
+        new-file cache invalidation (app.py:455-461): a re-ingest
+        atomically replaces the collection. ``mode="append"`` is
+        rejected: it would add a second idf row and embed the new chunks
+        under a different IDF fit than the old ones.
 
         The only cross-node boundaries are the IDF document-frequency
         reduce and the final write — same shape at any scale.
         """
         from pyspark.ml.feature import IDF, HashingTF, Tokenizer
 
-        chunks = chunk_documents(docs, text_col).withColumn(
+        if mode == "append":
+            raise ValueError(
+                "ingest(mode='append') is not supported: the IDF weights are "
+                "fit over the whole collection, so a re-ingest must overwrite "
+                "it (mode='overwrite') with every document"
+            )
+        # doc_id as long whatever the input's width: CHUNKS_SCHEMA is fixed
+        chunks = chunk_documents(
+            docs.withColumn("doc_id", F.col("doc_id").cast("long")), text_col
+        ).withColumn(
             "chunk_id",
             F.col("doc_id") * F.lit(1_000_000) + F.col("chunk_no"),
         )
@@ -99,21 +130,26 @@ class RagPipeline:
             "page_content",
             vector_to_array("embedding").alias("embedding"),
         )
-        out.write.mode(mode).parquet(f"{self.index_dir}/chunks")
+        # the fit counted the chunks; ceil(n / cores) rows per file lets
+        # a single-partition input still scan on every core
+        n_chunks = idf_model.numDocs
+        per_file = math.ceil(n_chunks / self.spark.sparkContext.defaultParallelism)
+        out.write.mode(mode).option("maxRecordsPerFile", per_file).parquet(
+            f"{self.index_dir}/chunks"
+        )
         # idf weights as a 1-row table so retrieve() can embed queries
         # identically without refitting (hashing itself is stateless)
         self.spark.createDataFrame(
-            [([float(x) for x in idf_model.idf],)], "idf array<double>"
+            [([float(x) for x in idf_model.idf],)], IDF_SCHEMA
         ).write.mode(mode).parquet(f"{self.index_dir}/idf")
 
         n_docs = docs.count()
-        n_chunks = out.count()
         return IngestStats(n_docs=n_docs, n_chunks=n_chunks, dim=self.dim)
 
     # ----------------------------------------------------------- read path
 
     def _chunks(self) -> DataFrame:
-        return self.spark.read.parquet(f"{self.index_dir}/chunks")
+        return self.spark.read.schema(CHUNKS_SCHEMA).parquet(f"{self.index_dir}/chunks")
 
     def _embed_queries(self, queries: DataFrame, text_col: str) -> DataFrame:
         """Embed query rows with the stored idf weights — murmur3
@@ -126,7 +162,7 @@ class RagPipeline:
         tf = HashingTF(
             inputCol="words", outputCol="tf", numFeatures=self.dim
         ).transform(toks)
-        idf = self.spark.read.parquet(f"{self.index_dir}/idf")
+        idf = self.spark.read.schema(IDF_SCHEMA).parquet(f"{self.index_dir}/idf")
         return (
             tf.crossJoin(F.broadcast(idf))
             .withColumn(
@@ -151,20 +187,26 @@ class RagPipeline:
         """R8 port (perform_vector_search, app.py:256-296), set-oriented:
         ALL queries resolve in one corpus pass.
 
-        fetch_k candidates per query via a partitioned window top-k
-        (for a single query Catalyst degenerates this to the same
-        work as TakeOrderedAndProject), then greedy MMR per query
-        group in applyInPandas — bounded at fetch_k rows per group,
-        never the corpus. ``mmr=False`` reproduces the reference's
-        second, default-settings retriever (app.py:401).
+        Each side's norm is projected before the cross join (once per
+        chunk, once per query), so a pair costs one dot; the sim is
+        ``round(cosine, 6)`` bit for bit. fetch_k candidates per query
+        come from a partitioned window top-k (partial per-partition
+        limits run before its shuffle), then greedy MMR per query group
+        in applyInPandas — bounded at fetch_k rows per group, never the
+        corpus. ``mmr=False`` reproduces the reference's second,
+        default-settings retriever (app.py:401).
         """
         import pandas as pd
 
+        qv = F.col("qv")
         q = self._embed_queries(queries, text_col).select(
-            F.col(id_col).alias("query_id"), "qv"
+            F.col(id_col).alias("query_id"), qv, norm(qv).alias("qn")
         )
-        corpus = self._chunks()
-        sim = F.round(cosine(F.col("embedding"), F.col("qv")), 6)
+        emb = F.col("embedding")
+        corpus = self._chunks().select(
+            "chunk_id", "doc_id", "page_content", emb, norm(emb).alias("en")
+        )
+        sim = F.round(dot(emb, qv) / (F.col("en") * F.col("qn")), 6)
         w = Window.partitionBy("query_id").orderBy(
             F.col("sim").desc(), F.col("chunk_id")
         )
@@ -198,6 +240,45 @@ class RagPipeline:
         )
         return cands.groupBy("query_id").applyInPandas(rerank, schema)
 
+    def _gate(
+        self, retrieved: DataFrame, queries: DataFrame, text_col: str, id_col: str
+    ) -> DataFrame:
+        """One aggregate per query over the MMR result: the relevance
+        verdict and the top-3 source previews (query_id, relevant,
+        sources). ``query`` reads both from this one consumption of
+        ``retrieved``; ``assess_relevance`` selects the verdict and
+        Catalyst prunes the unused previews."""
+        kw = F.filter(
+            F.split(F.lower(F.col(text_col)), " "), lambda w: F.length(w) > 3
+        )
+        q = queries.select(F.col(id_col).alias("query_id"), kw.alias("keywords"))
+        hits = F.size(
+            F.filter(
+                F.col("keywords"),
+                lambda k: F.instr(F.lower(F.col("page_content")), k) > 0,
+            )
+        )
+        # app.py:359 `[:3]`, app.py:544 `[:300]`
+        preview = F.struct(
+            "mmr_rank", F.substring("page_content", 1, 300).alias("preview")
+        )
+        joined = retrieved.join(F.broadcast(q), "query_id")
+        return joined.groupBy("query_id").agg(
+            F.count("*").alias("n_docs"),
+            F.max(hits).alias("matches"),
+            F.first(F.size("keywords")).alias("n_keywords"),
+            F.array_sort(
+                F.collect_list(F.when(F.col("mmr_rank") < 3, preview))
+            ).alias("ranked"),
+        ).select(
+            "query_id",
+            (
+                (F.col("n_docs") >= 3)
+                | (F.col("matches") >= F.col("n_keywords") / 2)
+            ).alias("relevant"),
+            F.transform(F.col("ranked"), lambda s: s.preview).alias("sources"),
+        )
+
     def assess_relevance(
         self, retrieved: DataFrame, queries: DataFrame,
         text_col: str = "query_text", id_col: str = "query_id",
@@ -206,31 +287,8 @@ class RagPipeline:
         relevant iff >= 3 chunks retrieved OR the chunks contain at
         least half of the query's len>3 keywords (substring match,
         exactly the reference's `keyword in content`)."""
-        kw = F.filter(
-            F.split(F.lower(F.col(text_col)), " "), lambda w: F.length(w) > 3
-        )
-        q = queries.select(F.col(id_col).alias("query_id"), kw.alias("keywords"))
-        joined = retrieved.join(F.broadcast(q), "query_id")
-        per_chunk = joined.select(
-            "query_id",
-            "keywords",
-            F.size(
-                F.filter(
-                    F.col("keywords"),
-                    lambda k: F.instr(F.lower(F.col("page_content")), k) > 0,
-                )
-            ).alias("hits"),
-        )
-        return per_chunk.groupBy("query_id").agg(
-            F.count("*").alias("n_docs"),
-            F.max("hits").alias("matches"),
-            F.first(F.size("keywords")).alias("n_keywords"),
-        ).select(
-            "query_id",
-            (
-                (F.col("n_docs") >= 3)
-                | (F.col("matches") >= F.col("n_keywords") / 2)
-            ).alias("relevant"),
+        return self._gate(retrieved, queries, text_col, id_col).select(
+            "query_id", "relevant"
         )
 
     def route(
@@ -240,7 +298,8 @@ class RagPipeline:
         """R12's deterministic analogue (app.py:298-343): the LLM
         search-needed bit becomes a freshness-keyword predicate; the
         four-way branch structure is the reference's own
-        (app.py:343-433)."""
+        (app.py:343-433). Columns of ``relevance`` beyond the verdict
+        ride along (``query`` passes its source previews this way)."""
         fresh = (
             F.instr(F.lower(F.col(text_col)), "latest") > 0
         ) | (F.instr(F.lower(F.col(text_col)), "current") > 0) | (
@@ -256,7 +315,8 @@ class RagPipeline:
             .when(F.col("relevant"), "document_rag")
             .otherwise("direct_answer")
         )
-        return j.select("query_id", text_col, plan.alias("plan_type"))
+        extra = [c for c in relevance.columns if c not in ("query_id", "relevant")]
+        return j.select("query_id", text_col, plan.alias("plan_type"), *extra)
 
     def query(
         self, queries: DataFrame,
@@ -266,28 +326,12 @@ class RagPipeline:
         """The full read path (SURVEY §3.2): retrieve -> gate -> route ->
         assemble context. Output mirrors the reference's plan dict
         (app.py:405-417): one row per query with plan_type and the
-        top-3 source previews (app.py:359 `[:3]`, app.py:544 `[:300]`)."""
+        top-3 source previews (app.py:359 `[:3]`, app.py:544 `[:300]`).
+        The retrieval is consumed once (``_gate``), so one call scans
+        and scores the index once."""
         retrieved = self.retrieve(queries, text_col, id_col, k=k)
-        rel = self.assess_relevance(retrieved, queries, text_col, id_col)
-        routed = self.route(queries, rel, text_col, id_col)
-        sources = (
-            retrieved.where(F.col("mmr_rank") < 3)
-            .groupBy("query_id")
-            .agg(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct("mmr_rank", F.substring("page_content", 1, 300).alias("preview"))
-                    )
-                ).alias("ranked")
-            )
-            .select(
-                "query_id",
-                F.transform(F.col("ranked"), lambda s: s.preview).alias("sources"),
-            )
-        )
-        return routed.join(sources, "query_id", "left").select(
-            "query_id", text_col, "plan_type", "sources"
-        )
+        gate = self._gate(retrieved, queries, text_col, id_col)
+        return self.route(queries, gate, text_col, id_col)
 
     # ----------------------------------------------------------- DDL path
 
