@@ -1,8 +1,10 @@
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file lives in, whatever the working directory
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 SF_DIR = "/root/testdata/sf0.001"
 

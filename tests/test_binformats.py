@@ -1,6 +1,7 @@
 """Pytests for the REAL RIFF/WAV and PNG codecs (round 12) —
 adversarial container checks independent of both engines."""
 
+import os
 import struct
 import zlib
 
@@ -14,6 +15,7 @@ from vectordb_agentic_rag_spark.operators.binformats import (
     decode_png_gray8,
     parse_wav,
 )
+from vectordb_agentic_rag_spark.tables import REPO_ROOT
 
 
 def test_wav_roundtrip_including_odd_pad_and_unknown_chunk():
@@ -1006,7 +1008,7 @@ def test_inflate_dynamic_huffman_decodes_real_zlib_output():
         b"the quick brown fox jumps over the lazy dog " * 50,
         bytes(range(256)) * 20,
         b"aabbccdd" * 1000,
-        open("/root/repo/README.md", "rb").read()[:8000],
+        open(os.path.join(REPO_ROOT, "README.md"), "rb").read()[:8000],
     ]
     import random
 

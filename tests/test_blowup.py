@@ -10,7 +10,9 @@ import os
 
 import pytest
 
-SYNTH = "/root/repo/_scratch/sf1x"
+from vectordb_agentic_rag_spark.tables import SCRATCH_ROOT
+
+SYNTH = os.path.join(SCRATCH_ROOT, "sf1x")
 
 pytestmark = pytest.mark.skipif(
     not os.path.exists(f"{SYNTH}/lineitem.parquet"),

@@ -1,6 +1,9 @@
 """RagPipeline's read path against a brute-force numpy oracle, plus the
 guards on its shape: one scan of the index per ``query()`` call, an
 index layout that scans on every core, and no append into an index.
+Degenerate inputs have a defined result: a chunk or query whose vector
+is zero has no cosine, so the chunk is never retrieved and the query
+retrieves nothing, as does a NULL query text.
 
 The oracle scores every (query, chunk) pair with the engine's own
 arithmetic spelled out in numpy: a sequential left fold over the
@@ -44,9 +47,8 @@ def pipe(spark, sf_dir, tmp_path_factory):
     p.clear()
 
 
-@pytest.fixture(scope="module")
-def index(pipe):
-    t = pq.read_table(f"{pipe.index_dir}/chunks").sort_by("chunk_id")
+def _load_index(index_dir: str) -> dict:
+    t = pq.read_table(f"{index_dir}/chunks").sort_by("chunk_id")
     emb = np.array(t.column("embedding").to_pylist(), dtype=np.float64)
     return {
         "chunk_id": np.array(t.column("chunk_id").to_pylist()),
@@ -55,6 +57,11 @@ def index(pipe):
         "embedding": emb,
         "norm": np.sqrt(_fold_dot(emb, emb)),
     }
+
+
+@pytest.fixture(scope="module")
+def index(pipe):
+    return _load_index(pipe.index_dir)
 
 
 @pytest.fixture(scope="module")
@@ -99,10 +106,13 @@ def _round6(x: float) -> float:
 
 
 def _top(index, qv, n):
-    """Positions of the n best chunks by (6-dp sim desc, chunk_id), with sims."""
-    raw = _fold_dot(index["embedding"], qv) / (index["norm"] * math.sqrt(_fold_dot(qv, qv)))
-    sims = [_round6(x) for x in raw]
-    order = sorted(range(len(sims)), key=lambda i: (-sims[i], index["chunk_id"][i]))[:n]
+    """Positions of the n best chunks by (6-dp sim desc, chunk_id), with
+    sims. A zero-norm chunk or query has no cosine and ranks nowhere."""
+    qn = math.sqrt(_fold_dot(qv, qv))
+    live = [i for i in range(len(index["norm"])) if index["norm"][i] > 0 and qn > 0]
+    raw = _fold_dot(index["embedding"][live], qv) / (index["norm"][live] * qn)
+    sims = dict(zip(live, (_round6(x) for x in raw)))
+    order = sorted(live, key=lambda i: (-sims[i], index["chunk_id"][i]))[:n]
     return order, [sims[i] for i in order]
 
 
@@ -226,3 +236,107 @@ def test_append_ingest_is_rejected(pipe, spark, sf_dir):
         pipe.ingest(docs, mode="append")
     assert spark.read.parquet(f"{pipe.index_dir}/idf").count() == 1
     assert spark.read.parquet(f"{pipe.index_dir}/chunks").count() == pipe.stats.n_chunks
+
+
+def test_degenerate_queries_retrieve_nothing(pipe, queries, spark):
+    """A blank query has a zero vector and a NULL query text none: both
+    retrieve no rows and route as not relevant, while every other query
+    in the same batch gets exactly what it gets without them."""
+    qdf, texts, _ = queries
+    normal = qdf.where(F.col("query_id") < 8)
+    bad = spark.createDataFrame(
+        [(1000, "   "), (1001, None)],
+        "query_id long, query_text string",
+    )
+    mixed = normal.unionByName(bad)
+    for kw in ({"mmr": False}, {}):
+        got = pipe.retrieve(mixed, **kw).collect()
+        assert sorted(got) == sorted(pipe.retrieve(normal, **kw).collect())
+    routed = {r.query_id: r for r in pipe.query(mixed).collect()}
+    alone = {r.query_id: r for r in pipe.query(normal).collect()}
+    assert {q: routed[q] for q in alone} == alone
+    assert [(routed[q].plan_type, routed[q].sources) for q in (1000, 1001)] == [
+        ("direct_answer", None), ("direct_answer", None)
+    ]
+
+
+def test_zero_norm_chunks_are_never_retrieved(spark, tmp_path):
+    """The word alpha is in every chunk, so its IDF weight is 0 and the
+    chunk that holds nothing else embeds as the zero vector: no query
+    retrieves it, even when fewer than k chunks are left. The other
+    chunks still rank against the oracle, a 0.0 sim included, and the
+    query "alpha" is itself a zero vector."""
+    p = RagPipeline(spark, str(tmp_path / "index"))
+    p.ingest(spark.createDataFrame(
+        [(1, "alpha beta"), (2, "alpha gamma"), (3, "alpha")],
+        "doc_id long, text string",
+    ))
+    idx = _load_index(p.index_dir)
+    assert (idx["norm"] == 0).tolist() == [False, False, True]
+    qdf = spark.createDataFrame(
+        [(0, "alpha beta"), (1, "gamma"), (2, "alpha")],
+        "query_id long, query_text string",
+    )
+    qv = {r.query_id: np.array(r.qv) for r in p._embed_queries(qdf, "query_text").collect()}
+    got = _by_query(p.retrieve(qdf, mmr=False).collect())
+    for qid in (0, 1, 2):
+        pos, sims = _top(idx, qv[qid], DEFAULT_K)
+        rows = sorted(got.get(qid, []), key=lambda r: (-r.sim, r.chunk_id))
+        assert [(r.chunk_id, r.sim) for r in rows] == [
+            (int(idx["chunk_id"][i]), s) for i, s in zip(pos, sims)
+        ], qid
+    assert {qid for qid in got} == {0, 1}  # "alpha" alone is a zero query
+    assert 3_000_000 not in {r.chunk_id for r in p.retrieve(qdf).collect()}
+
+
+def test_one_chunk_corpus_answers_every_query(spark, tmp_path):
+    """One chunk means IDF log((1+1)/(1+1)) = 0 for every term, so the
+    whole index is zero vectors: every query retrieves nothing and the
+    batch routes on the freshness words alone, instead of failing."""
+    p = RagPipeline(spark, str(tmp_path / "index"))
+    p.ingest(spark.createDataFrame([(1, "a short document")], "doc_id long, text string"))
+    qdf = spark.createDataFrame(
+        [(0, "short document"), (1, "latest document"), (2, None)],
+        "query_id long, query_text string",
+    )
+    assert p.retrieve(qdf).count() == 0
+    assert sorted((r.query_id, r.plan_type) for r in p.query(qdf).collect()) == [
+        (0, "direct_answer"), (1, "web_search"), (2, "direct_answer")
+    ]
+
+
+_OUTSIDE_SCRIPT = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from vectordb_agentic_rag_spark.plans import RagPipeline
+from vectordb_agentic_rag_spark.session import get_spark
+from vectordb_agentic_rag_spark.tables import table
+
+spark = get_spark("outside-repo")
+p = RagPipeline(spark, sys.argv[3])
+p.ingest(table(spark, sys.argv[2], "documents").select("doc_id", "text"))
+q = spark.createDataFrame([(0, "spark table merge window")], "query_id long, query_text string")
+print(json.dumps([r.plan_type for r in p.query(q).collect()]))
+spark.stop()
+"""
+
+
+def test_query_runs_outside_the_repo(sf_dir, tmp_path):
+    """A driver that finds the package through its own sys.path, started
+    from another directory with PYTHONPATH unset: the MMR step's Python
+    workers must still import the package."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    from vectordb_agentic_rag_spark.tables import REPO_ROOT
+
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", _OUTSIDE_SCRIPT, REPO_ROOT, sf_dir, str(tmp_path / "index")],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert json.loads(out.stdout.strip().splitlines()[-1]) == ["document_rag"]

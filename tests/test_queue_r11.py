@@ -1,5 +1,5 @@
 """Recompute pytests for the round-11 queued ops (implemented round 10,
-registration deferred — see registry._DEFERRED_OPERATOR_MODULES).
+registered at round-11 start via registry._OPERATOR_MODULES).
 Plain-Python re-derivations from the raw parquet: independent of both
 engines, so a logic bug mirrored into the oracle cannot hide."""
 

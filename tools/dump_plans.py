@@ -1,16 +1,29 @@
-"""Regenerate PLANS.md: formatted physical plans of the headline and
+"""Dump formatted physical plans.
+
+With no arguments, regenerate PLANS.md: the plans of the headline and
 scale-critical queries, so plan shapes (pushdown, broadcast,
 TakeOrderedAndProject, bucket scans) are reviewable without running
 Spark.  Run after changing any of the listed operators:
 
     python tools/dump_plans.py
+
+With arguments, capture before/after plans for an optimization round
+into plans/<subdir>/<name>_<tag>.txt, so plan claims can be checked
+against files (default names = the five headline bench queries,
+bench.py HEADLINE values; sf dir from SPARK_GRAFT_SF_DIR, default
+sf0.1):
+
+    python tools/dump_plans.py r15 before [names...]
+    python tools/dump_plans.py r15 after  [names...]
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SHOWCASE = [
     ("agg_hash_group", "partial+final hash agg, pushdown, integer cents"),
@@ -132,13 +145,43 @@ SHOWCASE = [
 ]
 
 
-def main() -> None:
+def _formatted(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def _session():
     from vectordb_agentic_rag_spark import QUERIES, load_all_operators
     from vectordb_agentic_rag_spark.session import get_spark
 
     load_all_operators()
     spark = get_spark("plans")
     spark.sparkContext.setLogLevel("ERROR")
+    return spark, QUERIES
+
+
+def dump_round(subdir: str, tag: str, names: list[str]) -> None:
+    """plans/<subdir>/<name>_<tag>.txt for each name."""
+    # default = the five headline bench ops, imported from bench.py so
+    # this tool cannot drift from what the bench actually times
+    from bench import HEADLINE
+
+    spark, queries = _session()
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    out_dir = os.path.join(REPO, "plans", subdir)
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names or list(HEADLINE.values()):
+        plan = _formatted(queries[name](spark, sf_dir))
+        path = os.path.join(out_dir, f"{name}_{tag}.txt")
+        with open(path, "w") as f:
+            f.write(plan)
+        print(f"wrote {path} ({len(plan)} bytes)")
+
+
+def dump_showcase() -> None:
+    """PLANS.md: every SHOWCASE plan at sf0.01."""
+    spark, queries = _session()
     sf_dir = "/root/testdata/sf0.01"
 
     out = [
@@ -149,16 +192,22 @@ def main() -> None:
         "",
     ]
     for name, why in SHOWCASE:
-        df = QUERIES[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = _formatted(queries[name](spark, sf_dir))
         out += [f"## {name}", "", f"*{why}*", "", "```", plan.rstrip(), "```", ""]
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md with {len(SHOWCASE)} plans")
 
 
+def main(argv: list[str]) -> None:
+    if not argv:
+        dump_showcase()
+    elif len(argv) >= 2:
+        dump_round(argv[0], argv[1], argv[2:])
+    else:
+        sys.exit(__doc__)
+
+
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

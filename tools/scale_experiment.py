@@ -23,9 +23,10 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-SYNTH = "/root/repo/_scratch/sf1x"
+SYNTH = os.path.join(REPO, "_scratch", "sf1x")
 SRC = "/root/testdata/sf0.1"
 COPIES = 10
 
@@ -291,8 +292,7 @@ OPS = [
     # day-domain ops are covered by the existing events entries.
     # stream_psi_drift_live is streaming-replay-bound like the other
     # stream_* ops.  dedup_substring_span_purge and the band-tuning
-    # table are document-scaled and audit here (deferred-registration
-    # ops still load through load_deferred_operators).
+    # table are document-scaled and audit here.
     ("agg_qini_uplift_curve", "events"),
     ("agg_laspeyres_paasche_index", "lineitem"),
     ("graph_local_bridges", "lineitem"),
@@ -528,7 +528,7 @@ def build_synth(spark) -> None:
         if name == "events":
             # re-encode ts as int64 nanoseconds so the synthetic set
             # round-trips through the same nanos read path as the
-            # fixtures (tables._read_table)
+            # fixtures (tables.table)
             df = df.withColumn("ts", (F.unix_micros("ts") * 1000).cast("long"))
         if name in SHIFTS:
             # primary keys shift per copy so cardinality scales with
@@ -555,9 +555,6 @@ def main() -> None:
     from vectordb_agentic_rag_spark.tables import table
 
     load_all_operators()
-    from vectordb_agentic_rag_spark.registry import load_deferred_operators
-
-    load_deferred_operators()  # round-queued ops audit early too
     spark = get_spark("scale-exp")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -649,7 +646,7 @@ def main() -> None:
         ),
         "",
     ]
-    with open("/root/repo/SCALE.md", "w") as f:
+    with open(os.path.join(REPO, "SCALE.md"), "w") as f:
         f.write("\n".join(lines))
     print(f"wrote SCALE.md ({len(OPS)} ops x {len(labels)} scales)")
 

@@ -25,17 +25,35 @@ is the worked example with the plan pin
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-# (applicationId, cache_key) -> checkpointed bucket assignment. The
-# localCheckpoint below is EAGER per DataFrame build (the r13 lesson:
-# a ckpt inside an op body re-derives on every build — for the
+from ..tables import session_artifact
+
+
+def _range_buckets(df: DataFrame, cols: list, buckets: int) -> DataFrame:
+    return (
+        df.repartitionByRange(buckets, *cols)
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint()
+    )
+
+
+# The localCheckpoint above is EAGER per DataFrame build (the r13
+# lesson: a ckpt inside an op body re-derives on every build — for the
 # abc-pareto caller that was a full fact groupBy + range shuffle per
 # call); callers whose input is a pure function of (session, sf_dir)
-# pass cache_key to run it once per session. Swept by
-# tables.clear_session_caches via the _*_CACHE convention.
-_PREFIX_BUCKETS_CACHE: dict = {}
+# pass cache_key to run it once per session.
+@session_artifact
+def _shared_range_buckets(
+    spark: SparkSession,
+    cache_key: str,
+    *,
+    df: DataFrame,
+    cols: list,
+    buckets: int,
+) -> DataFrame:
+    return _range_buckets(df, cols, buckets)
 
 
 def dist_exclusive_prefix(
@@ -53,22 +71,11 @@ def dist_exclusive_prefix(
     columns keep their natural Spark sum type (BIGINT -> BIGINT,
     DECIMAL(p,s) -> widened DECIMAL) — cast at the call site."""
     cols = [F.col(c).desc() if d else F.col(c).asc() for c, d in order]
-    if cache_key is not None:
-        spark = df.sparkSession
-        full_key = (spark.sparkContext.applicationId, cache_key)
-        dfp = _PREFIX_BUCKETS_CACHE.get(full_key)
-        if dfp is None:
-            dfp = (
-                df.repartitionByRange(buckets, *cols)
-                .withColumn("_pid", F.spark_partition_id())
-                .localCheckpoint()
-            )
-            _PREFIX_BUCKETS_CACHE[full_key] = dfp
+    if cache_key is None:
+        dfp = _range_buckets(df, cols, buckets)
     else:
-        dfp = (
-            df.repartitionByRange(buckets, *cols)
-            .withColumn("_pid", F.spark_partition_id())
-            .localCheckpoint()
+        dfp = _shared_range_buckets(
+            df.sparkSession, cache_key, df=df, cols=cols, buckets=buckets
         )
     w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
     offs = dfp.groupBy("_pid").agg(

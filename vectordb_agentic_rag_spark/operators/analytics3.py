@@ -21,7 +21,12 @@ from ..functions.domain import dist_exclusive_prefix
 from ..registry import query
 from ..tables import table
 from .analytics import _KM_D, _km_asg_ctes, _km_assignments
-from .analytics2 import _TRI_PN_CTES, _cosupply_edges, _tri_per_node
+from .analytics2 import (
+    _COSUPPLY_MIN_SUPPORT,
+    _TRI_PN_CTES,
+    _cosupply_edges,
+    _tri_per_node,
+)
 from .text import _bpe_duck_ctes, _bpe_train
 
 # ---------------------------------------------------------------------------
@@ -658,7 +663,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Parity: 2*tri and deg*(deg-1) are exact integers; one division,
     round(6); ties break on (cc DESC, s_suppkey)."""
-    e = _cosupply_edges(spark, sf_dir)
+    e = _cosupply_edges(spark, sf_dir, _COSUPPLY_MIN_SUPPORT)
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))

@@ -1,9 +1,8 @@
 """Round-12 DEFERRED queue — implemented and pytest-covered in round
-11, registered when round 12's verification window has room (the
-registry's deferred-registration contract: the round-11 window closed
-at exactly 50 never-checked ops, so these names must not displace any
-of them).  Flip this module into `_OPERATOR_MODULES` at round-12
-start.
+11, registered when round 12's verification window had room (the
+round-11 window closed at exactly 50 never-checked ops, so these names
+could not displace any of them).  The module joined
+`_OPERATOR_MODULES` at round-12 start.
 
 Ops:
 - win_lindley_queue_backlog — the Lindley recursion b_d = max(0,
@@ -72,7 +71,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import table
+from ..tables import SCRATCH_ROOT, sf_tag, table
 
 # ---------------------------------------------------------------------------
 # win_lindley_queue_backlog
@@ -858,11 +857,9 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docstring's contract is interchange, not analytics; the read
     plan is a full scan by design and real pipelines convert to
     parquet on ingest (this op IS that converter's two halves)."""
-    from ..tables import sf_tag, table as t
-
-    out = f"/root/repo/_scratch/sources/nation_xml_{sf_tag(sf_dir)}"
+    out = f"{SCRATCH_ROOT}/sources/nation_xml_{sf_tag(sf_dir)}"
     (
-        t(spark, sf_dir, "nation")
+        table(spark, sf_dir, "nation")
         .selectExpr(
             "CAST(n_nationkey AS BIGINT) AS n_nationkey",
             "n_name",
@@ -1284,7 +1281,7 @@ def dedup_minhash_estimate_error(
     codes, _ = _minhash_codes_and_candidates(spark, sf_dir)
     # session-cached ckpt pair table at 0.5 (shared with the threshold
     # sweep — threshold is a kernel post-filter, same codes side-file)
-    pairs = _minhash_verified_pairs(spark, sf_dir, threshold=0.5).select(
+    pairs = _minhash_verified_pairs(spark, sf_dir, 0.5).select(
         "doc_a", "doc_b", "jac"
     )
     sigs = codes.withColumnRenamed("cs", "codes").select(
@@ -1467,7 +1464,6 @@ def rag_context_dedup_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     orderBy+limit / semi-join-restricted BOUNDED frames (<= 20 docs,
     <= 190 pairs); the fold runs on one row.  The near-dup pair table
     itself is the banded-LSH join (never all-pairs)."""
-    from ..tables import sf_tag
     from .dedup import _minhash_codes_and_candidates, _verify_pairs_jaccard
     from .rag import _BM25_B, _BM25_K1, _BM25_TERMS
 

@@ -36,7 +36,7 @@ from ..functions.vector import (
     seq_norm,
 )
 from ..registry import query
-from ..tables import sf_tag, table
+from ..tables import SCRATCH_ROOT, session_artifact, sf_tag, table
 
 # DuckDB fragment: cosine similarity between two DOUBLE[] lists, with the
 # same sequential-fold arithmetic as functions.vector.cosine.
@@ -350,7 +350,28 @@ _DD_UNIT = (
     "sqrt(list_dot_product({a}::DOUBLE[], {a}::DOUBLE[])))"
 )
 
-_prenorm_written: set[tuple[int, str]] = set()
+
+@session_artifact
+def _unit_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The corpus unit-normalized and written to scratch once per
+    session, read back."""
+    out = f"{SCRATCH_ROOT}/unit_embeddings_{sf_tag(sf_dir)}.parquet"
+    emb = table(spark, sf_dir, "embeddings")
+    # divide, don't multiply by a reciprocal: x/n rounds once, while
+    # x*(1/n) rounds twice — the oracle divides, so we must too for
+    # bit parity at round(…,6)
+    n_col = norm(F.col("embedding"))
+    (
+        emb.select(
+            "vec_id",
+            F.transform(
+                "embedding", lambda x: x.cast("double") / n_col
+            ).alias("u"),
+        )
+        .write.mode("overwrite")
+        .parquet(out)
+    )
+    return spark.read.parquet(out)
 
 
 @query(
@@ -380,26 +401,7 @@ def vec_prenormalized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     not query properties, so they belong in the stored layout (here a
     materialized parquet table in scratch, memoized per session).
     Top-3 per query via partitioned window, ties on neighbor_id."""
-    out = f"/root/repo/_scratch/unit_embeddings_{sf_tag(sf_dir)}.parquet"
-    key = (id(spark), sf_dir)
-    if key not in _prenorm_written:
-        emb = table(spark, sf_dir, "embeddings")
-        # divide, don't multiply by a reciprocal: x/n rounds once, while
-        # x*(1/n) rounds twice — the oracle divides, so we must too for
-        # bit parity at round(…,6)
-        n_col = norm(F.col("embedding"))
-        (
-            emb.select(
-                "vec_id",
-                F.transform(
-                    "embedding", lambda x: x.cast("double") / n_col
-                ).alias("u"),
-            )
-            .write.mode("overwrite")
-            .parquet(out)
-        )
-        _prenorm_written.add(key)
-    unit = spark.read.parquet(out)
+    unit = _unit_embeddings(spark, sf_dir)
     q = unit.where(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("u").alias("qv")
     )

@@ -195,10 +195,19 @@ class RagPipeline:
         in applyInPandas — bounded at fetch_k rows per group, never the
         corpus. ``mmr=False`` reproduces the reference's second,
         default-settings retriever (app.py:401).
+
+        A pair with a zero norm on either side has no cosine: its sim is
+        NULL, it ranks last and is dropped after the window, so a
+        zero-norm chunk is never retrieved and a zero-norm query (blank
+        text, or no token the index weights) retrieves nothing. A NULL
+        query text retrieves nothing either. The drop sits above the
+        window, where Catalyst cannot push it into the scoring
+        projection, so a pair still costs one dot.
         """
         import pandas as pd
 
         qv = F.col("qv")
+        queries = queries.where(F.col(text_col).isNotNull())
         q = self._embed_queries(queries, text_col).select(
             F.col(id_col).alias("query_id"), qv, norm(qv).alias("qn")
         )
@@ -206,7 +215,7 @@ class RagPipeline:
         corpus = self._chunks().select(
             "chunk_id", "doc_id", "page_content", emb, norm(emb).alias("en")
         )
-        sim = F.round(dot(emb, qv) / (F.col("en") * F.col("qn")), 6)
+        sim = F.round(F.try_divide(dot(emb, qv), F.col("en") * F.col("qn")), 6)
         w = Window.partitionBy("query_id").orderBy(
             F.col("sim").desc(), F.col("chunk_id")
         )
@@ -215,7 +224,9 @@ class RagPipeline:
             .select("query_id", "chunk_id", "doc_id", "page_content",
                     "embedding", sim.alias("sim"))
             .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= (fetch_k if mmr else k))
+            .where(
+                (F.col("rn") <= (fetch_k if mmr else k)) & F.col("sim").isNotNull()
+            )
             .drop("rn")
         )
         if not mmr:

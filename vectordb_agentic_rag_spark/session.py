@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .tables import REPO_ROOT
+
 
 def get_spark(app_name: str = "vectordb-rag-spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -41,5 +43,9 @@ def get_spark(app_name: str = "vectordb-rag-spark") -> SparkSession:
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Python workers (pandas UDFs, mapInPandas) import this package
+        # by name; point them at the directory that holds it, so a
+        # driver started from any working directory works
+        .config("spark.executorEnv.PYTHONPATH", REPO_ROOT)
         .getOrCreate()
     )

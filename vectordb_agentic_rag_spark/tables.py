@@ -8,9 +8,15 @@ predicate pushdown reach the parquet scan (verify with
 
 from __future__ import annotations
 
+import functools
+import inspect
 import os
+from collections.abc import Callable
+from typing import Any, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
+
+T = TypeVar("T")
 
 TABLES = [
     "region",
@@ -37,25 +43,82 @@ def sf_tag(sf_dir: str) -> str:
     return sf_dir.rstrip("/").rsplit("/", 1)[-1]
 
 
-# memoized logical plans: DataFrames are immutable, so handing the same
-# scan plan to every query is safe and skips repeated parquet-footer
-# schema reads (a py4j + filesystem roundtrip per call). Catalyst still
-# prunes columns/filters per query — this caches the *plan root*, not data.
-_scan_cache: dict[tuple[int, str, str], DataFrame] = {}
+# The checkout this package lives in, and the one root under which
+# operators write scratch files (materialized layouts, spill probes,
+# stream checkpoints). Derived from this file, so a copy of the repo
+# writes into its own ``_scratch``.
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SCRATCH_ROOT = os.path.join(REPO_ROOT, "_scratch")
+
+# The one session store: (SparkContext, builder, args) -> what the
+# builder returned. Holds checkpointed frames, scan plans, driver-side
+# values computed from data, and markers for files written once per
+# session. Keyed on the SparkContext object itself: a py4j-free lookup
+# (``applicationId`` costs two round trips per call), and the key holds
+# a reference, so a stopped context's entries can never be served to a
+# new one the way a recycled ``id()`` could.
+_SESSION_ARTIFACT_CACHE: dict[tuple, Any] = {}
+_MISS = object()
 
 
+def session_artifact(build: Callable[..., T]) -> Callable[..., T]:
+    """Decorator: run ``build(spark, *args)`` once per Spark session and
+    return that result on every later call with equal ``args``.
+
+    The single way to hold a checkpointed frame (or a written file, or
+    a collected value) across op builds: put the ``localCheckpoint`` /
+    write / ``collect`` inside ``build``, never in the op body, where it
+    would run eagerly on every DataFrame build.  ``args`` must be
+    hashable; an artifact derived from a fixture dir takes ``sf_dir``
+    as an argument (see ``sf_tag`` for paths).  ``build``'s
+    keyword-only parameters are inputs, not key: a later call with
+    equal ``args`` gets the first call's result whatever it passes
+    there.  Any other keyword is refused, so a keyed argument cannot
+    slip out of the key by being passed by name.
+    """
+    inputs_ok = {
+        p.name
+        for p in inspect.signature(build).parameters.values()
+        if p.kind is p.KEYWORD_ONLY
+    }
+
+    @functools.wraps(build)
+    def get(spark: SparkSession, *args, **inputs):
+        if inputs and not inputs.keys() <= inputs_ok:
+            raise TypeError(
+                f"{build.__name__}: pass keyed arguments positionally"
+            )
+        key = (spark.sparkContext, build, args)
+        hit = _SESSION_ARTIFACT_CACHE.get(key, _MISS)
+        if hit is _MISS:
+            hit = _SESSION_ARTIFACT_CACHE[key] = build(spark, *args, **inputs)
+        return hit
+
+    return get
+
+
+def clear_session_caches() -> None:
+    """Drop every session artifact, scan plans and hot-table pins
+    included.
+
+    The store deliberately has no TTL — the bench/driver lifecycle is
+    one session over one or two sf dirs — but a long-lived session
+    sweeping many sf dirs retains every localCheckpoint RDD it ever
+    built (ADVICE r10).  Call this between sweeps to release them; the
+    next call of each artifact rebuilds it.
+    """
+    _SESSION_ARTIFACT_CACHE.clear()
+
+
+@session_artifact
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one fixture table (memoized per session)."""
-    key = (id(spark), sf_dir, name)
-    cached = _scan_cache.get(key)
-    if cached is not None:
-        return cached
-    df = _read_table(spark, sf_dir, name)
-    _scan_cache[key] = df
-    return df
+    """Scan one fixture table (memoized per session).
 
-
-def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    DataFrames are immutable, so handing the same scan plan to every
+    query is safe and skips repeated parquet-footer schema reads (a
+    py4j + filesystem roundtrip per call). Catalyst still prunes
+    columns/filters per query — this caches the *plan root*, not data.
+    """
     if name not in TABLES:
         raise KeyError(f"unknown fixture table {name!r}; have {TABLES}")
     if name == "events":
@@ -95,9 +158,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-_hot_cached: set[tuple[int, str]] = set()
-
-
 def cache_hot_tables(spark: SparkSession, sf_dir: str, names=None) -> None:
     """Pin fixture tables into Spark's in-memory columnar cache.
 
@@ -109,15 +169,14 @@ def cache_hot_tables(spark: SparkSession, sf_dir: str, names=None) -> None:
     pass ``names`` accordingly; storage level MEMORY_AND_DISK spills
     instead of OOMing when the set is mis-sized.
     """
-    key = (id(spark), sf_dir)
-    if key in _hot_cached:
-        return
     import math
 
     import pyarrow.parquet as pq
 
     for name in names or TABLES:
         df = table(spark, sf_dir, name)
+        if df.is_cached:  # pinned earlier this session
+            continue
         # Right-size the cached relation: the parquet scan is planned at
         # leaf-node default parallelism (32 slices here) even for a 1 MB
         # file, and an InMemoryRelation keeps its builder's partitioning
@@ -152,49 +211,6 @@ def cache_hot_tables(spark: SparkSession, sf_dir: str, names=None) -> None:
         # every subsequent query
         cached = (df.coalesce(1) if k == 1 else df.repartition(k)).cache()
         cached.count()
-        _scan_cache[(id(spark), sf_dir, name)] = cached
-    _hot_cached.add(key)
-
-
-# non-operator modules that hold _*_CACHE session caches (operator
-# modules are enumerated from the registry lists)
-_EXTRA_CACHE_MODULES = [
-    "vectordb_agentic_rag_spark.functions.domain",
-]
-
-
-def clear_session_caches() -> None:
-    """Evict every module-level session cache (checkpointed artifact
-    frames keyed by (applicationId, sf_dir) plus the scan memo).
-
-    The caches deliberately have no TTL — the bench/driver lifecycle
-    is one session over one or two sf dirs — but a long-lived session
-    sweeping many sf dirs retains every localCheckpoint RDD it ever
-    built (ADVICE r10).  Call this between sweeps to release them.
-
-    Caches are discovered by convention, not by a hand-maintained
-    list: every module-level dict named ``_*_CACHE`` in an operator
-    module is a session cache (the r14 verdict found five caches the
-    old explicit list had missed).  Only modules already imported are
-    swept — loading one here would run its @query registrations as a
-    side effect.
-    """
-    import re
-    import sys
-
-    from .registry import _DEFERRED_OPERATOR_MODULES, _OPERATOR_MODULES
-
-    _scan_cache.clear()
-    _hot_cached.clear()
-    pat = re.compile(r"_[A-Z0-9_]*_CACHE\Z")
-    for mod_name in (
-        list(_OPERATOR_MODULES)
-        + list(_DEFERRED_OPERATOR_MODULES)
-        + list(_EXTRA_CACHE_MODULES)
-    ):
-        mod = sys.modules.get(mod_name)
-        if mod is None:
-            continue
-        for attr, val in vars(mod).items():
-            if pat.fullmatch(attr) and isinstance(val, dict):
-                val.clear()
+        _SESSION_ARTIFACT_CACHE[
+            (spark.sparkContext, table.__wrapped__, (sf_dir, name))
+        ] = cached
